@@ -8,8 +8,7 @@ Scaling evidence (north rule, sandbox form — BASELINE.md): the flagship
 spatial join runs on a 1-executor and a 4-executor local-cluster (real
 separate 2-core executor JVMs, package shipped via the --py-files artifact)
 on identical input; efficiency = throughput(4N) / (4 * throughput(N)).
-Disable with SPARK_GRAFT_SCALING=0; SPARK_GRAFT_SCALE_MODE=threads keeps
-the older local[2]-vs-local[8] thread form.
+Disable with SPARK_GRAFT_SCALING=0.
 """
 
 from __future__ import annotations
@@ -297,34 +296,22 @@ def _parse_pinned(out) -> float:
     raise RuntimeError(f"pinned run failed: {out.stdout[-500:]} {out.stderr[-500:]}")
 
 
-def _leg_cmd_env(spec, driver_cpus: list[int], exec_cpus: list[int] | None, bdir: str):
-    """(argv, env) for one pinned scaling leg. Cluster legs ('xK') pin the
-    driver python+JVM to `driver_cpus` (constant infrastructure, like a
-    real cluster's driver node) and re-pin executor processes to
-    `exec_cpus` — only THAT budget scales between levels. Thread legs pin
-    the whole tree to driver_cpus+exec_cpus (no separate processes)."""
-    env = dict(os.environ)
-    if isinstance(spec, str) and spec.startswith("x") and exec_cpus:
-        pin = ",".join(str(i) for i in driver_cpus)
-        env["SPARK_GRAFT_EXEC_CPUS"] = ",".join(str(i) for i in exec_cpus)
-    else:
-        pin = ",".join(str(i) for i in driver_cpus + (exec_cpus or []))
-        env.pop("SPARK_GRAFT_EXEC_CPUS", None)
-    argv = ["taskset", "-c", pin, sys.executable, os.path.abspath(__file__),
-            "--pinned-flagship", str(spec), bdir]
-    return argv, env
-
-
-def _pinned_flagship(spec, driver_cpus: list[int], exec_cpus: list[int] | None,
+def _pinned_flagship(spec, driver_cpus: list[int], exec_cpus: list[int],
                      bdir: str) -> float:
     """Run the flagship steady-state in a fresh pinned process; returns
-    best wall seconds. Falls back to in-process (unpinned) when taskset is
-    unavailable."""
+    best wall seconds. The cluster leg ('xK') pins the driver python+JVM
+    to `driver_cpus` (constant infrastructure, like a real cluster's
+    driver node) and re-pins executor processes to `exec_cpus` — only THAT
+    budget scales between levels. Falls back to in-process (unpinned) when
+    taskset is unavailable."""
     import shutil
     import subprocess
 
     if shutil.which("taskset"):
-        argv, env = _leg_cmd_env(spec, driver_cpus, exec_cpus, bdir)
+        env = dict(os.environ)
+        env["SPARK_GRAFT_EXEC_CPUS"] = ",".join(str(i) for i in exec_cpus)
+        argv = ["taskset", "-c", ",".join(str(i) for i in driver_cpus), sys.executable,
+                os.path.abspath(__file__), "--pinned-flagship", str(spec), bdir]
         out = subprocess.run(argv, capture_output=True, text=True,
                              timeout=1800, env=env)
         return _parse_pinned(out)
@@ -332,45 +319,6 @@ def _pinned_flagship(spec, driver_cpus: list[int], exec_cpus: list[int] | None,
     _, _, dt = flagship_steady(spark, bdir, iters=3)
     spark.stop()
     return dt
-
-
-def _pinned_pair_concurrent(
-    spec_low, alloc_low, spec_high, alloc_high, bdir: str
-) -> tuple[float, float]:
-    """Run BOTH scaling legs at the same time on DISJOINT pinned CPU sets
-    and return (low_sec, high_sec). The idea: concurrent legs see the
-    IDENTICAL host window, so their ratio cancels shared-VM drift by
-    construction. MEASURED OUTCOME on this kernel (2026-08-18, idle host,
-    back-to-back with serial controls): the legs interfere ACROSS
-    processes even on disjoint CPU sets — serial x4 read 30.4 s while
-    concurrent x4 read 47.6 s in the same window (x1 129→145 s) — this
-    firecracker kernel's concurrent-JVM degradation is host-global, not
-    per-CPU-set, and it punishes the wider leg harder, biasing efficiency
-    DOWN (0.63-0.76 concurrent vs 0.93+ serial, same code, same hour).
-    Therefore NOT the default; kept behind SPARK_GRAFT_SCALE_CONCURRENT=1
-    as the documented failed experiment."""
-    import shutil
-    import subprocess
-
-    if not shutil.which("taskset"):
-        return (
-            _pinned_flagship(spec_low, *alloc_low, bdir),
-            _pinned_flagship(spec_high, *alloc_high, bdir),
-        )
-
-    def _start(spec, alloc):
-        argv, env = _leg_cmd_env(spec, alloc[0], alloc[1], bdir)
-        return subprocess.Popen(
-            argv, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-            text=True, env=env,
-        )
-
-    p_lo, p_hi = _start(spec_low, alloc_low), _start(spec_high, alloc_high)
-    outs = []
-    for p in (p_lo, p_hi):
-        stdout, stderr = p.communicate(timeout=1800)
-        outs.append(type("R", (), {"stdout": stdout, "stderr": stderr})())
-    return _parse_pinned(outs[0]), _parse_pinned(outs[1])
 
 
 def _descendants(pid: int) -> list[int]:
@@ -505,26 +453,18 @@ def _bench_main():
     _hard_stop(spark)
     if DO_SCALING:
         # north-rule scaling evidence, sandbox form: the SAME job on an
-        # N-executor and a 4N-executor cluster. Default mode 'executors'
-        # runs local-cluster[K,2,mem] — K real, separate, fixed-size (2-core)
+        # N-executor and a 4N-executor cluster: local-cluster[K,2,mem] — K real, separate, fixed-size (2-core)
         # executor JVMs, scaled 1 -> 4, the whole process tree taskset-pinned
         # to exactly K*2 CPUs so JVMs and python UDF workers share the
         # budget. Executor JVM config is byte-identical at both sizes; only
         # the executor COUNT changes — the same thing a real N -> 4N cluster
-        # resize does. Mode 'threads' (SPARK_GRAFT_SCALE_MODE) keeps the old
-        # local[2]-vs-local[8] thread form for comparison.
-        mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "executors")
+        # resize does.
         n_low = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-        if mode == "executors":
-            k = max(1, n_low // 2)
-            spec_low, spec_high = f"x{k}", f"x{4 * k}"
-            cores_low, cores_high = 2 * k, 8 * k
-            label_low = f"cluster[{k}exec]"
-            label_high = f"cluster[{4 * k}exec]"
-        else:
-            spec_low, spec_high = str(n_low), str(4 * n_low)
-            cores_low, cores_high = n_low, 4 * n_low
-            label_low, label_high = f"local[{n_low}]", f"local[{4 * n_low}]"
+        k = max(1, n_low // 2)
+        spec_low, spec_high = f"x{k}", f"x{4 * k}"
+        cores_low, cores_high = 2 * k, 8 * k
+        label_low = f"cluster[{k}exec]"
+        label_high = f"cluster[{4 * k}exec]"
         # the host is noisy (shared firecracker VM): run a FIXED number of
         # interleaved rep pairs and take per-level minima, so a slow patch
         # hits both levels rather than one. Fixed-N (no resample-until-pass)
@@ -538,17 +478,14 @@ def _bench_main():
         reps = max(1, int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "3")))
         # legs run SERIALLY, interleaved (x1 then x4 back-to-back per pair,
         # ~3 min apart — close enough that the per-pair ratio bounds window
-        # drift). The concurrent-legs variant (both legs at once on
-        # disjoint CPU sets, intended to cancel drift exactly) was tried
-        # and REJECTED: this kernel degrades concurrent JVMs host-globally
-        # (serial x4 30.4 s vs concurrent 47.6 s in the same window),
-        # biasing efficiency down 0.93→0.63-0.76. It stays available as
-        # SPARK_GRAFT_SCALE_CONCURRENT=1 for reproduction.
-        concurrent = os.environ.get("SPARK_GRAFT_SCALE_CONCURRENT", "0") == "1"
+        # drift). Running both legs at once on disjoint CPU sets was
+        # measured and rejected: concurrent JVMs degrade each other
+        # host-globally (serial x4 30.4 s vs concurrent 47.6 s in the same
+        # window), biasing efficiency down 0.93→0.63-0.76.
         # CPU allocation per leg: a DRIVER set (constant infrastructure —
         # a real cluster resize never scales the driver node) + an
-        # EXECUTOR set sized to the level's 2*K budget. Disjoint across
-        # legs so concurrent pairs can't touch each other's CPUs:
+        # EXECUTOR set sized to the level's 2*K budget, disjoint across
+        # legs:
         #   low:  driver [0,1]                exec [2 .. 2+2K)
         #   high: driver [2+2K, 4+2K)         exec [4+2K .. 4+10K)
         drv = 2
@@ -560,11 +497,7 @@ def _bench_main():
         )
         lows, highs = [], []
         for rep in range(reps):
-            if concurrent:
-                lo, hi = _pinned_pair_concurrent(
-                    spec_low, alloc_low, spec_high, alloc_high, bdir
-                )
-            elif rep % 2:
+            if rep % 2:
                 # alternate leg ORDER per pair: under a monotone host-speed
                 # drift, lo-first pairs bias the ratio one way and hi-first
                 # pairs the other, so the median over pairs sheds the trend
@@ -589,7 +522,7 @@ def _bench_main():
         # optimistic upper-middle, biasing the gate metric toward passing
         median = paired[(len(paired) - 1) // 2]
         result["scaling"] = {
-            "mode": mode,
+            "mode": "executors",
             f"{label_low}_docs_per_sec": round(tp_low, 1),
             f"{label_high}_docs_per_sec": round(tp_high, 1),
             "factor": 4,
@@ -604,13 +537,10 @@ def _bench_main():
             "JVM+python pinned to a constant 2-CPU driver set per leg "
             "(a cluster resize scales executors, not the driver node), "
             "executor processes re-pinned to the level's 2K-CPU budget; "
-            + ("pair legs run CONCURRENTLY on disjoint CPU sets (NON-"
-               "DEFAULT: measured to self-interfere on this kernel, biases "
-               "efficiency down)" if concurrent else
-               "pair legs run serially, interleaved back-to-back with "
-               "alternating order per pair (the per-pair ratio bounds "
-               "window drift; order alternation sheds monotone trends)")
-            + "; suite gateway JVM hard-terminated before the scaling "
+            "pair legs run serially, interleaved back-to-back with "
+            "alternating order per pair (the per-pair ratio bounds "
+            "window drift; order alternation sheds monotone trends)"
+            "; suite gateway JVM hard-terminated before the scaling "
             "phase (co-resident JVM trees degrade each other on this "
             "kernel)"
             + "; headline = median of per-pair efficiencies; per-level min "

@@ -1,4 +1,4 @@
-"""Hierarchical cell index (H3/S2-style surrogate), pure numpy.
+"""Hierarchical cell index (H3/S2-style surrogate): numpy and Column forms.
 
 The reference has no spatial index at all — its spatial join is an O(n*m)
 nested loop (lib/join.py:42-55). The north rule requires an H3/S2-style cell
@@ -14,14 +14,23 @@ this is a deterministic lat/lon quadtree grid with H3-like properties:
 Cells are a pure join/partition key: correctness never depends on the cell
 scheme (candidate pairs are always refined by the exact geometry kernels),
 so an exact-H3 implementation is unnecessary (SURVEY.md §1.2).
+
+Every numpy function used by the engine has a Column (JVM codegen) twin
+below it (``ix_col``/``iy_col``, ``encode_col``, ``pack_col``,
+``decode_col``, ``explode_cover_bbox``, ``explode_disk``,
+``ring_min_distance_col``) computing the same values with the same IEEE
+expression order, so the grid is defined once for the driver, the Python
+kernels and the Spark plans alike.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column, DataFrame, functions as F
 
 RES_MIN, RES_MAX = 0, 29
-_RES_SHIFT, _IX_SHIFT = 58, 29
+_RES_SHIFT = 58
+_IX_SHIFT = 29
 _IDX_MASK = (1 << 29) - 1
 
 
@@ -117,3 +126,103 @@ def pick_resolution(widths: np.ndarray, lo: int = 4, hi: int = 12, max_cells: in
     target = med * max(1.0, np.sqrt(max_cells) / 8.0)
     res = int(np.floor(np.log2(360.0 / target)))
     return max(lo, min(hi, res))
+
+
+# ---- Column (JVM codegen) twins -------------------------------------------
+# Arguments typed as columns take a Column or a column name.
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _clamped_index(v, origin: float, extent: float, res: int) -> Column:
+    n = 1 << res
+    return F.least(
+        F.greatest(F.floor((_col(v) + F.lit(origin)) / F.lit(extent / n)), F.lit(0)),
+        F.lit(n - 1),
+    ).cast("long")
+
+
+def ix_col(lon, res: int) -> Column:
+    """Clamped column index ``ix`` of :func:`encode` as a long Column."""
+    return _clamped_index(lon, 180.0, 360.0, res)
+
+
+def iy_col(lat, res: int) -> Column:
+    """Clamped row index ``iy`` of :func:`encode` as a long Column."""
+    return _clamped_index(lat, 90.0, 180.0, res)
+
+
+def pack_col(res: int, ix, iy) -> Column:
+    """Twin of :func:`pack` for index columns."""
+    ix, iy = _col(ix), _col(iy)
+    return (
+        F.lit(res << _RES_SHIFT)
+        + F.shiftleft(ix.cast("long"), _IX_SHIFT)
+        + iy.cast("long")
+    )
+
+
+def encode_col(lon, lat, res: int) -> Column:
+    """Twin of :func:`encode`: lon/lat columns -> cell id at ``res``."""
+    return pack_col(res, ix_col(lon, res), iy_col(lat, res))
+
+
+def decode_col(cell) -> tuple[Column, Column, Column]:
+    """Twin of :func:`decode`: cell id column -> (res, ix, iy) Columns."""
+    cell = _col(cell)
+    return (
+        F.shiftright(cell, _RES_SHIFT),
+        F.shiftright(cell, _IX_SHIFT).bitwiseAND(F.lit(_IDX_MASK)),
+        cell.bitwiseAND(F.lit(_IDX_MASK)),
+    )
+
+
+def explode_rect(df: DataFrame, ix0, ix1, iy0, iy1, ix: str = "ix", iy: str = "iy") -> DataFrame:
+    """One row per (row of ``df``, index pair in [ix0, ix1] x [iy0, iy1]),
+    appended as columns ``ix`` and ``iy``: two sequence explodes, because a
+    select admits one generator. Empty ranges drop the row."""
+    return df.select("*", F.explode(F.sequence(ix0, ix1)).alias(ix)).select(
+        "*", F.explode(F.sequence(iy0, iy1)).alias(iy)
+    )
+
+
+def explode_cover_bbox(
+    df: DataFrame, xmin, ymin, xmax, ymax, res: int, ix: str = "ix", iy: str = "iy"
+) -> DataFrame:
+    """Twin of :func:`cover_bbox`: one row per (row, cell whose rectangle
+    intersects the row's bbox), the cell as index columns ``ix``/``iy``."""
+    return explode_rect(
+        df, ix_col(xmin, res), ix_col(xmax, res), iy_col(ymin, res), iy_col(ymax, res), ix, iy
+    )
+
+
+def explode_disk(
+    df: DataFrame, cix, ciy, res: int, kx, ky=None, ix: str = "ix", iy: str = "iy"
+) -> DataFrame:
+    """Twin of :func:`disk`: one row per (row, cell within ``kx`` columns and
+    ``ky`` rows of cell (cix, ciy)), clipped to the grid; ``ky`` defaults to
+    ``kx`` (the Chebyshev disk). Radii may be ints or per-row Columns."""
+    cix, ciy = _col(cix), _col(ciy)
+    ky = kx if ky is None else ky
+    top = F.lit((1 << res) - 1)
+    return explode_rect(
+        df,
+        F.greatest(cix - kx, F.lit(0)), F.least(cix + kx, top),
+        F.greatest(ciy - ky, F.lit(0)), F.least(ciy + ky, top),
+        ix, iy,
+    )
+
+
+def ring_min_distance_col(cix, ciy, k: int, px, py, res: int) -> Column:
+    """Twin of :func:`ring_min_distance` for point Columns (px, py) in
+    cell (cix, ciy): the planar distance from the point to the outside of
+    the cell's k-disk."""
+    w, h = cell_size(res)
+    return F.least(
+        px - (F.lit(-180.0) + (cix - k) * F.lit(w)),
+        (F.lit(-180.0) + (cix + (k + 1)) * F.lit(w)) - px,
+        py - (F.lit(-90.0) + (ciy - k) * F.lit(h)),
+        (F.lit(-90.0) + (ciy + (k + 1)) * F.lit(h)) - py,
+    )

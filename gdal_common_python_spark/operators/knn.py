@@ -11,11 +11,14 @@ Engine:
   scale this prunes to O(pairs-in-range) instead of O(n*m). Without a radius
   it degrades to the reference's full cross join (exact parity mode).
 - ``knn``: cell-ring expansion with exact re-rank (SURVEY §7 hard-part 5):
-  round 1 joins each query point to candidates in its 3x3 cell disk and
-  keeps points whose k-th candidate distance is provably final (<= the
-  distance to the disk boundary); the remainder — typically a tiny fraction —
-  falls back to a cross join. Ties break on (distance, to_id) so results are
-  deterministic and match the DuckDB oracle's ORDER BY.
+  each ring of (1, 4, 16) joins the still-unresolved query points to the
+  candidates in their Chebyshev cell disk of that radius and resolves a
+  point once its k-th candidate distance is STRICTLY below the distance to
+  the outside of the disk (a point at exactly that distance could still
+  win the tie-break); the points left after the last ring — empty or edge
+  regions, vanishingly few — take an exact cross join. Ties break on
+  (distance, to_id) so results are deterministic and match the DuckDB
+  oracle's ORDER BY.
 
 The pre-filter callback becomes a plain ``df.filter`` on either side
 (SURVEY §2.9), pushed below the join by Catalyst.
@@ -27,12 +30,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from .spatial_join import cell_expr
+from ..kernels import cells as cellk
 from .util import track_persisted
 
 
 def _dist(x1, y1, x2, y2):
     return F.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
+
+
+def _cell_keyed(df: DataFrame, x: str, y: str, res: int) -> DataFrame:
+    """``df`` with the (jx, jy) grid index of its point (x, y) at ``res``."""
+    return df.withColumn("jx", cellk.ix_col(F.col(x), res)).withColumn(
+        "jy", cellk.iy_col(F.col(y), res)
+    )
 
 
 def near_table(
@@ -65,20 +75,12 @@ def near_table(
     if radius is None:
         pairs = a.crossJoin(b)
     else:
-        n = 1 << res
-        w, h = 360.0 / n, 180.0 / n
-        kx, ky = int(radius / w) + 1, int(radius / h) + 1
-        dx = F.explode(F.sequence(F.lit(-kx), F.lit(kx))).alias("dx")
-        ac = a.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-            "cy", F.floor((F.col("ay") + 90.0) / h)
+        w, h = cellk.cell_size(res)
+        ac = cellk.explode_disk(
+            a, cellk.ix_col(F.col("ax"), res), cellk.iy_col(F.col("ay"), res), res,
+            int(radius / w) + 1, int(radius / h) + 1, ix="jx", iy="jy",
         )
-        ac = ac.select("*", dx)
-        ac = ac.select("*", F.explode(F.sequence(F.lit(-ky), F.lit(ky))).alias("dy"))
-        ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
-        bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
-            "jy", F.floor((F.col("by") + 90.0) / h)
-        )
-        pairs = ac.join(bc, ["jx", "jy"])
+        pairs = ac.join(_cell_keyed(b, "bx", "by", res), ["jx", "jy"])
     out = pairs.withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
     if radius is not None:
         out = out.filter(F.col("distance") <= F.lit(radius))
@@ -156,116 +158,69 @@ def knn(
 ) -> DataFrame:
     """Self k-nearest-neighbours: (from_id, rank, to_id, distance).
 
-    Round 1: 3x3 cell-disk candidates; keep query points whose k-th distance
-    is <= their distance to the disk boundary (no farther point can beat it).
-    Round 2: cross-join fallback for the rest.
+    Rings (1, 4, 16): the unresolved points join the candidates of their
+    ring-radius cell disk; a point whose k-th distance is strictly below
+    its distance to the outside of the disk is final (every point outside
+    is farther). Whatever survives the last ring takes a cross join.
     """
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
     a = points.select(
         F.col("point_id").alias("from_id"), F.col("x").alias("ax"), F.col("y").alias("ay")
     )
     b = points.select(
         F.col("point_id").alias("to_id"), F.col("x").alias("bx"), F.col("y").alias("by")
     )
-
-    ac = a.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-        "cy", F.floor((F.col("ay") + 90.0) / h)
-    )
-    ac = ac.select("*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"))
-    ac = ac.select("*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"))
-    ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
-    bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
-        "jy", F.floor((F.col("by") + 90.0) / h)
-    )
-    cand = (
-        ac.join(bc, ["jx", "jy"])
-        .filter(F.col("from_id") != F.col("to_id"))
-        .withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
-        .select("from_id", "ax", "ay", "to_id", "distance")
-    )
+    bc = _cell_keyed(b, "bx", "by", res)
+    cx, cy = cellk.ix_col(F.col("ax"), res), cellk.iy_col(F.col("ay"), res)
     win = Window.partitionBy("from_id").orderBy("distance", "to_id")
-    # persist: ranked (<= k rows per query point — output-sized, spillable)
-    # feeds `done`, the resolution test, AND the rest chain; without it the
-    # candidate join recomputes for every ring probe and the fallback.
-    # Persisted handles ride the result — util.release(out) frees them.
-    handles = []
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .persist()
-    )
-    handles.append(ranked)
-
-    # distance from the query point to its 3x3-disk boundary: the safety bound
-    cx = F.floor((F.col("ax") + 180.0) / w)
-    cy = F.floor((F.col("ay") + 90.0) / h)
-    bound = F.least(
-        F.col("ax") - ((cx - 1) * w - 180.0),
-        ((cx + 2) * w - 180.0) - F.col("ax"),
-        F.col("ay") - ((cy - 1) * h - 90.0),
-        ((cy + 2) * h - 90.0) - F.col("ay"),
-    )
-    per_from = ranked.groupBy("from_id", "ax", "ay").agg(
-        F.count("*").alias("n_cand"), F.max("distance").alias("kth")
-    )
-    ok_ids = per_from.filter((F.col("n_cand") >= k) & (F.col("kth") <= bound)).select("from_id")
-    done = ranked.join(F.broadcast(ok_ids), "from_id", "left_semi").select(
-        "from_id", "rank", "to_id", "distance"
-    )
-
-    # ring expansion: unresolved points retry with a wider cell disk before
-    # the exact brute-force tail (SURVEY §7 hard-part 5: expand until the
-    # k-th candidate distance clears the disk's minimum exit distance)
-    rest = a.join(F.broadcast(ok_ids), "from_id", "left_anti").persist()
-    results = [done]
-    for ring in (4, 16):
-        if rest.isEmpty():
+    # persist: each ring's ranked table (<= k rows per query point —
+    # output-sized, spillable) feeds the resolution test AND the result,
+    # and each rest feeds the next ring; without them the candidate join
+    # recomputes for every probe. Persisted handles ride the result —
+    # util.release(out) frees them.
+    handles, results = [], []
+    rest = a
+    for ring in (1, 4, 16):
+        if ring > 1 and rest.isEmpty():
             break
-        rc = rest.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-            "cy", F.floor((F.col("ay") + 90.0) / h)
-        )
-        rc = rc.select("*", F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dx"))
-        rc = rc.select("*", F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dy"))
-        rc = rc.withColumn("jx", F.col("cx") + F.col("dx")).withColumn(
-            "jy", F.col("cy") + F.col("dy")
-        )
-        rcand = (
-            rc.join(bc, ["jx", "jy"])
+        cand = (
+            cellk.explode_disk(
+                rest.withColumn("cx", cx).withColumn("cy", cy), "cx", "cy", res, ring,
+                ix="jx", iy="jy",
+            )
+            .join(bc, ["jx", "jy"])
             .filter(F.col("from_id") != F.col("to_id"))
             .withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
             .select("from_id", "ax", "ay", "to_id", "distance")
         )
-        rranked = (
-            rcand.withColumn("rank", F.row_number().over(win))
+        ranked = (
+            cand.withColumn("rank", F.row_number().over(win))
             .filter(F.col("rank") <= k)
             .persist()
         )
-        handles.append(rranked)
-        rbound = F.least(
-            F.col("ax") - ((cx - ring) * w - 180.0),
-            ((cx + ring + 1) * w - 180.0) - F.col("ax"),
-            F.col("ay") - ((cy - ring) * h - 90.0),
-            ((cy + ring + 1) * h - 90.0) - F.col("ay"),
-        )
-        rper = rranked.groupBy("from_id", "ax", "ay").agg(
+        handles.append(ranked)
+        per_from = ranked.groupBy("from_id", "ax", "ay").agg(
             F.count("*").alias("n_cand"), F.max("distance").alias("kth")
         )
-        rok = rper.filter((F.col("n_cand") >= k) & (F.col("kth") <= rbound)).select("from_id")
+        bound = cellk.ring_min_distance_col(cx, cy, ring, F.col("ax"), F.col("ay"), res)
+        ok_ids = per_from.filter((F.col("n_cand") >= k) & (F.col("kth") < bound)).select(
+            "from_id"
+        )
         results.append(
-            rranked.join(F.broadcast(rok), "from_id", "left_semi").select(
+            ranked.join(F.broadcast(ok_ids), "from_id", "left_semi").select(
                 "from_id", "rank", "to_id", "distance"
             )
         )
         # unpersist the superseded rest (bounds the CacheManager footprint
         # across rings; Spark recomputes transparently if a later action
-        # still needs the evicted lineage)
+        # still needs the evicted lineage). Ring 1's rest is the input,
+        # never persisted: unpersisting it would make Spark rebuild the
+        # not-yet-materialized caches planned on it.
         prev_rest = rest
-        rest = rest.join(F.broadcast(rok), "from_id", "left_anti").persist()
-        prev_rest.unpersist()
+        rest = rest.join(F.broadcast(ok_ids), "from_id", "left_anti").persist()
+        if ring > 1:
+            prev_rest.unpersist()
 
-    # exact brute-force tail for whatever survives all rings (vanishingly
-    # few points — empty/edge regions)
+    # exact brute-force tail for whatever survives all rings
     fb = (
         rest.crossJoin(b)
         .filter(F.col("from_id") != F.col("to_id"))

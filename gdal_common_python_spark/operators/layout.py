@@ -22,26 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .spatial_join import cell_expr
-
-_RES_SHIFT, _IX_SHIFT = 58, 29
-_IDX_MASK = (1 << 29) - 1
-
-
-def _grid_ix(lon_col: Column, res: int) -> Column:
-    n = 1 << res
-    return F.least(
-        F.greatest(F.floor((lon_col + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-
-
-def _grid_iy(lat_col: Column, res: int) -> Column:
-    n = 1 << res
-    return F.least(
-        F.greatest(F.floor((lat_col + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+from ..kernels import cells as cellk
+from ..kernels.cells import _IX_SHIFT, _RES_SHIFT
 
 
 def zorder_key(lon_col: Column, lat_col: Column, res: int = 12) -> Column:
@@ -50,7 +32,7 @@ def zorder_key(lon_col: Column, lat_col: Column, res: int = 12) -> Column:
     codegen expression — the formula ports verbatim to the DuckDB oracle."""
     if not 1 <= res <= 29:
         raise ValueError(f"res must be in [1, 29], got {res}")
-    ix, iy = _grid_ix(lon_col, res), _grid_iy(lat_col, res)
+    ix, iy = cellk.ix_col(lon_col, res), cellk.iy_col(lat_col, res)
     key = F.lit(0).cast("long")
     for b in range(res):
         key = key + F.shiftleft(F.shiftright(ix, b) % 2, 2 * b + 1)
@@ -86,14 +68,9 @@ def layout_by_zorder(
 def _ancestor_cell(cell: Column, child_res: int, res: int) -> Column:
     """Native ancestor derivation (kernels.cells.parent) from a cell id at
     ``child_res`` up to ``res`` — pure long bit arithmetic."""
-    ix = F.shiftright(cell, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
-    iy = cell % F.lit(1 << _IX_SHIFT)
+    _, ix, iy = cellk.decode_col(cell)
     s = child_res - res
-    return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.shiftright(ix, s), _IX_SHIFT)
-        + F.shiftright(iy, s)
-    )
+    return cellk.pack_col(res, F.shiftright(ix, s), F.shiftright(iy, s))
 
 
 def cell_rollup(
@@ -118,7 +95,7 @@ def cell_rollup(
     if not 0 <= res_coarse <= res_fine:
         raise ValueError(f"need 0 <= res_coarse <= res_fine, got {res_coarse}/{res_fine}")
     fine = (
-        points.select(cell_expr(F.col(lon_col), F.col(lat_col), res_fine).alias("cell"))
+        points.select(cellk.encode_col(F.col(lon_col), F.col(lat_col), res_fine).alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").alias("n_points"))
     )
@@ -154,22 +131,10 @@ def cover_bbox_cells(
     the DuckDB oracle (floor/clamp + two unnested integer sequences)."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    out = (
-        df.withColumn("__ix0", _grid_ix(F.col(xmin_col), res))
-        .withColumn("__ix1", _grid_ix(F.col(xmax_col), res))
-        .withColumn("__iy0", _grid_iy(F.col(ymin_col), res))
-        .withColumn("__iy1", _grid_iy(F.col(ymax_col), res))
-        .withColumn("__ix", F.explode(F.sequence("__ix0", "__ix1")))
-        .withColumn("__iy", F.explode(F.sequence("__iy0", "__iy1")))
+    out = cellk.explode_cover_bbox(
+        df, xmin_col, ymin_col, xmax_col, ymax_col, res, ix="__ix", iy="__iy"
     )
-    cell = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.col("__ix"), _IX_SHIFT)
-        + F.col("__iy")
-    )
-    return out.withColumn("cell", cell).drop(
-        "__ix0", "__ix1", "__iy0", "__iy1", "__ix", "__iy"
-    )
+    return out.withColumn("cell", cellk.pack_col(res, "__ix", "__iy")).drop("__ix", "__iy")
 
 
 def compact_cells(
@@ -199,7 +164,7 @@ def compact_cells(
 
     cur = cells.select(F.col(cell_col).alias("cell")).distinct()
     for r in range(from_res, to_res, -1):
-        res_c = F.shiftright(F.col("cell"), _RES_SHIFT)
+        res_c = cellk.decode_col("cell")[0]
         key = F.when(
             res_c == r, _ancestor_cell(F.col("cell"), r, r - 1)
         ).otherwise(F.col("cell"))
@@ -233,9 +198,7 @@ def uncompact_cells(
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
     c = F.col(cell_col)
-    res_c = F.shiftright(c, _RES_SHIFT)
-    ix = F.shiftright(c, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
-    iy = c % F.lit(1 << _IX_SHIFT)
+    res_c, ix, iy = cellk.decode_col(c)
     # 2^(res - cell_res) via pow: exact in double for exponents <= 29,
     # then exact long arithmetic (shiftleft-by-a-Column has no Spark API)
     n = F.pow(F.lit(2.0), (F.lit(res) - res_c).cast("double")).cast("long")
@@ -248,10 +211,8 @@ def uncompact_cells(
         .withColumn("__dx", F.explode(F.sequence(F.lit(0).cast("long"), F.col("__n") - 1)))
         .withColumn("__dy", F.explode(F.sequence(F.lit(0).cast("long"), F.col("__n") - 1)))
     )
-    child = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + (F.col("__ix0") + F.col("__dx")) * F.lit(1 << _IX_SHIFT).cast("long")
-        + (F.col("__iy0") + F.col("__dy"))
+    child = cellk.pack_col(
+        res, F.col("__ix0") + F.col("__dx"), F.col("__iy0") + F.col("__dy")
     )
     return out.select(child.alias("cell")).distinct()
 
@@ -386,33 +347,19 @@ def grid_disk(
         raise ValueError(f"res must be in [0, 29], got {res}")
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    n = 1 << res
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col(cell_col), _IX_SHIFT) % m
-    iy = F.col(cell_col) % m
-    out = (
-        df.withColumn("__nix", F.explode(F.sequence(
-            F.greatest(ix - k, F.lit(0)), F.least(ix + k, F.lit(n - 1)))))
-        .withColumn("__niy", F.explode(F.sequence(
-            F.greatest(iy - k, F.lit(0)), F.least(iy + k, F.lit(n - 1)))))
+    _, ix, iy = cellk.decode_col(cell_col)
+    out = cellk.explode_disk(df, ix, iy, res, k, ix="__nix", iy="__niy")
+    return out.withColumn(out_col, cellk.pack_col(res, "__nix", "__niy")).drop(
+        "__nix", "__niy"
     )
-    nb = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.col("__nix"), _IX_SHIFT)
-        + F.col("__niy")
-    )
-    return out.withColumn(out_col, nb).drop("__nix", "__niy")
 
 
 def grid_distance(cell_a: Column, cell_b: Column) -> Column:
     """H3 ``gridDistance`` analog: Chebyshev cell distance between two
     same-resolution cells (the ring index at which ``grid_disk`` from one
     first reaches the other). Pure integer codegen; ports verbatim to SQL."""
-    m = F.lit(1 << _IX_SHIFT)
-    ixa = F.shiftright(cell_a, _IX_SHIFT) % m
-    iya = cell_a % m
-    ixb = F.shiftright(cell_b, _IX_SHIFT) % m
-    iyb = cell_b % m
+    _, ixa, iya = cellk.decode_col(cell_a)
+    _, ixb, iyb = cellk.decode_col(cell_b)
     return F.greatest(F.abs(ixa - ixb), F.abs(iya - iyb))
 
 
@@ -456,8 +403,7 @@ def polyfill(
     never a corpus. Bit-exact vs the oracle."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
+    w, h = cellk.cell_size(res)
     cov = cover_bbox_cells(
         zones.select(
             F.col(id_col),
@@ -468,9 +414,9 @@ def polyfill(
         ),
         res=res,
     ).select(id_col, "cell")
-    m = F.lit(1 << _IX_SHIFT)
-    cx = F.lit(-180.0) + (F.shiftright("cell", _IX_SHIFT) % m + F.lit(0.5)) * F.lit(w)
-    cy = F.lit(-90.0) + (F.col("cell") % m + F.lit(0.5)) * F.lit(h)
+    _, ix, iy = cellk.decode_col("cell")
+    cx = F.lit(-180.0) + (ix + F.lit(0.5)) * F.lit(w)
+    cy = F.lit(-90.0) + (iy + F.lit(0.5)) * F.lit(h)
     cand = cov.select(id_col, "cell", cx.alias("__cx"), cy.alias("__cy"))
     j = cand.join(edges, id_col)
     crossing = (
@@ -496,11 +442,8 @@ def cell_bounds(df: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
     power-of-two edge arithmetic, ports verbatim to SQL."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col(cell_col), _IX_SHIFT) % m
-    iy = F.col(cell_col) % m
+    w, h = cellk.cell_size(res)
+    _, ix, iy = cellk.decode_col(cell_col)
     return (
         df.withColumn("cell_xmin", F.lit(-180.0) + ix * F.lit(w))
         .withColumn("cell_ymin", F.lit(-90.0) + iy * F.lit(h))
@@ -575,14 +518,12 @@ def cell_smooth(
         raise ValueError(f"k must be >= 0, got {k}")
     n = 1 << res
     counts = (
-        points.select(cell_expr(F.col(lon_col), F.col(lat_col), res).alias("cell"))
+        points.select(cellk.encode_col(F.col(lon_col), F.col(lat_col), res).alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )
     dil = grid_disk(counts, res, k, cell_col="cell", out_col="neighbor")
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col("cell"), _IX_SHIFT) % m
-    iy = F.col("cell") % m
+    _, ix, iy = cellk.decode_col("cell")
     area = (
         (F.least(ix + k, F.lit(n - 1)) - F.greatest(ix - k, F.lit(0)) + 1)
         * (F.least(iy + k, F.lit(n - 1)) - F.greatest(iy - k, F.lit(0)) + 1)

@@ -42,25 +42,8 @@ from ..kernels import cells as cellk, geom, proj
 
 POINT_RX = r"POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)"
 
-_RES_SHIFT, _IX_SHIFT = 58, 29
-
-
-def cell_expr(lon_col, lat_col, res: int):
-    """Native (JVM codegen) cell encoding — mirrors kernels.cells.encode."""
-    n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((lon_col + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((lat_col + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + ix.cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-        + iy.cast("long")
-    )
+# native (JVM codegen) cell id of a lon/lat point — kernels.cells.encode
+cell_expr = cellk.encode_col
 
 
 def geo_spans(docs: DataFrame, points_only: bool = False) -> DataFrame:
@@ -211,40 +194,20 @@ def zone_cells(
             F.when(is_merc, inv_x2).otherwise(F.col("bbox.xmax")).alias("xmax"),
             F.when(is_merc, inv_y2).otherwise(F.col("bbox.ymax")).alias("ymax"),
         )
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-
-    def idx(col, lo, size, limit):
-        return F.least(F.greatest(F.floor((col + F.lit(lo)) / F.lit(size)), F.lit(0)), F.lit(limit - 1))
-
     carry = ["xmin", "ymin", "xmax", "ymax"] if with_bbox else []
     anchor = (
         [F.col("ix0").alias("zix0"), F.col("iy0").alias("ziy0")] if with_anchor else []
     )
     z = z.select(
         "zone_id",
-        idx(F.col("xmin"), 180.0, w, n).alias("ix0"),
-        idx(F.col("xmax"), 180.0, w, n).alias("ix1"),
-        idx(F.col("ymin"), 90.0, h, n).alias("iy0"),
-        idx(F.col("ymax"), 90.0, h, n).alias("iy1"),
+        cellk.ix_col(F.col("xmin"), res).alias("ix0"),
+        cellk.ix_col(F.col("xmax"), res).alias("ix1"),
+        cellk.iy_col(F.col("ymin"), res).alias("iy0"),
+        cellk.iy_col(F.col("ymax"), res).alias("iy1"),
         *carry,
     )
-    return (
-        z.select(
-            "zone_id", F.explode(F.sequence("ix0", "ix1")).alias("ix"),
-            "iy0", "iy1", "ix0", *carry,
-        )
-        .select("zone_id", "ix", F.explode(F.sequence("iy0", "iy1")).alias("iy"), "ix0", "iy0", *carry)
-        .select(
-            "zone_id",
-            (
-                F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-                + F.col("ix").cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-                + F.col("iy").cast("long")
-            ).alias("cell"),
-            *anchor,
-            *carry,
-        )
+    return cellk.explode_rect(z, "ix0", "ix1", "iy0", "iy1").select(
+        "zone_id", cellk.pack_col(res, "ix", "iy").alias("cell"), *anchor, *carry
     )
 
 
@@ -348,8 +311,7 @@ def spatial_join_points(
     if strategy == "auto":
         # estimate the exploded zone-cell count from the collected bboxes
         # instead of running a count job
-        n = 1 << res
-        w, h = 360.0 / n, 180.0 / n
+        w, h = cellk.cell_size(res)
         est = 0
         for rings in rect.values():
             xmin, ymin, xmax, ymax = geom.rings_bbox(rings)
@@ -461,6 +423,18 @@ def zone_edges_df(zones: DataFrame) -> DataFrame:
     )
     return r.select("zone_id", F.explode(edge).alias("e")).select(
         "zone_id", "e.ex1", "e.ey1", "e.ex2", "e.ey2"
+    )
+
+
+def edge_cells(edges: DataFrame, res: int, prefix: str = "") -> DataFrame:
+    """One row per (edge, grid cell its bbox covers at ``res``), the cell as
+    (cx, cy) — the edge bucketing :func:`edge_intersections` and
+    :func:`nearest_zone_distance` join on. Edge columns are
+    ``{prefix}ex1 .. {prefix}ey2``."""
+    x1, y1, x2, y2 = (F.col(f"{prefix}{c}") for c in ("ex1", "ey1", "ex2", "ey2"))
+    return cellk.explode_cover_bbox(
+        edges, F.least(x1, x2), F.least(y1, y2), F.greatest(x1, x2), F.greatest(y1, y2),
+        res, ix="cx", iy="cy",
     )
 
 
@@ -601,31 +575,15 @@ def spatial_join_geoms(
             rows.append(geom.rings_bbox(rings))
         return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
-    n_ = 1 << res
-    w_, h_ = 360.0 / n_, 180.0 / n_
-
-    def _idx(col, lo, size):
-        return F.least(
-            F.greatest(F.floor((col + F.lit(lo)) / F.lit(size)), F.lit(0)), F.lit(n_ - 1)
-        )
-
-    sp = (
-        spans.withColumn("__bb", span_bbox("wkt"))
-        .select(
-            *spans.columns,
-            _idx(F.col("__bb.xmin"), 180.0, w_).alias("sx0"),
-            _idx(F.col("__bb.xmax"), 180.0, w_).alias("sx1"),
-            _idx(F.col("__bb.ymin"), 90.0, h_).alias("sy0"),
-            _idx(F.col("__bb.ymax"), 90.0, h_).alias("sy1"),
-        )
-        .withColumn("ix", F.explode(F.sequence("sx0", "sx1")))
-        .withColumn("iy", F.explode(F.sequence("sy0", "sy1")))
-        .withColumn(
-            "cell",
-            F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-            + F.col("ix").cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-            + F.col("iy").cast("long"),
-        )
+    sp = spans.withColumn("__bb", span_bbox("wkt")).select(
+        *spans.columns,
+        cellk.ix_col(F.col("__bb.xmin"), res).alias("sx0"),
+        cellk.ix_col(F.col("__bb.xmax"), res).alias("sx1"),
+        cellk.iy_col(F.col("__bb.ymin"), res).alias("sy0"),
+        cellk.iy_col(F.col("__bb.ymax"), res).alias("sy1"),
+    )
+    sp = cellk.explode_rect(sp, "sx0", "sx1", "sy0", "sy1").withColumn(
+        "cell", cellk.pack_col(res, "ix", "iy")
     )
     # report-once dedup WITHOUT a shuffle: both covers are contiguous index
     # rectangles, so each (span, zone) pair shares a rectangle of cells and
@@ -909,16 +867,8 @@ def skew_report(
     All-integer arithmetic (`div`), so the oracle hash-matches."""
     if top_k < 1 or target_rows < 1:
         raise ValueError("top_k and target_rows must be >= 1")
-    n = 1 << res
     pts = geo_points(docs)
-    ix = F.least(
-        F.greatest(F.floor((F.col("x") + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((F.col("y") + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+    ix, iy = cellk.ix_col(F.col("x"), res), cellk.iy_col(F.col("y"), res)
     from .util import track_persisted
 
     # persist the dimension-sized census so the total and the join share ONE
@@ -1032,34 +982,18 @@ def edge_intersections(
     edges x covered cells, never the all-pairs square. The refine is one
     fixed IEEE expression tree (2x2 determinant solve), identical in the
     DuckDB oracle, so results are hash-exact."""
-    n = 1 << res
-    cw, chh = 360.0 / n, 180.0 / n
-
-    def cells_of(p: str) -> DataFrame:
-        lo_x = F.floor((F.least(f"{p}ex1", f"{p}ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")
-        hi_x = F.floor((F.greatest(f"{p}ex1", f"{p}ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")
-        lo_y = F.floor((F.least(f"{p}ey1", f"{p}ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")
-        hi_y = F.floor((F.greatest(f"{p}ey1", f"{p}ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")
-        clamp = lambda c: F.least(F.greatest(c, F.lit(0)), F.lit(n - 1))  # noqa: E731
-        return (
-            F.explode(F.sequence(clamp(lo_x), clamp(hi_x))).alias("cx"),
-            F.sequence(clamp(lo_y), clamp(hi_y)).alias("__cys"),
+    a, b = (
+        edge_cells(
+            edges.select(
+                F.col("zone_id").alias(f"{t}zone"),
+                F.col("ex1").alias(f"{t}ex1"), F.col("ey1").alias(f"{t}ey1"),
+                F.col("ex2").alias(f"{t}ex2"), F.col("ey2").alias(f"{t}ey2"),
+            ),
+            res,
+            prefix=t,
         )
-
-    def side(tag: str) -> DataFrame:
-        e = edges.select(
-            F.col("zone_id").alias(f"{tag}zone"),
-            F.col("ex1").alias(f"{tag}ex1"), F.col("ey1").alias(f"{tag}ey1"),
-            F.col("ex2").alias(f"{tag}ex2"), F.col("ey2").alias(f"{tag}ey2"),
-        )
-        cx, cys = cells_of(tag)
-        return (
-            e.select("*", cx, cys)
-            .select("*", F.explode("__cys").alias("cy"))
-            .drop("__cys")
-        )
-
-    a, b = side("a"), side("b")
+        for t in ("a", "b")
+    )
     cand = (
         a.join(b, ["cx", "cy"])
         .where(F.col("azone") < F.col("bzone"))
@@ -1535,13 +1469,18 @@ WHERE prev IS NULL OR prev != zone_id
 """
 
 
+# grid of the nearest-zone candidate search: edge cells at res 7, and the
+# refine disk radius (cells per axis) past which a point takes the
+# stragglers-broadcast path instead of fanning out
+_NZD_RES = 7
+_NZD_MAX_DISK = 8
+
+
 def nearest_zone_distance(
     spark: SparkSession,
     docs: DataFrame,
     zones: DataFrame,
     edges: DataFrame | None = None,
-    strategy: str = "auto",
-    edge_broadcast_limit: int = 2_000_000,
     **join_kwargs,
 ) -> DataFrame:
     """Re-geocode helper, the companion of :func:`spatial_anti_join`: for
@@ -1550,175 +1489,50 @@ def nearest_zone_distance(
     floor-quantized planar distance to the closest boundary segment and
     ties break to the smallest zone_id (one deterministic struct-min).
     A QA stage snaps out-of-coverage points to their most plausible region
-    or routes them for review with a confidence radius.
+    or routes them for review with a confidence radius. ``join_kwargs``
+    go to the anti join.
 
     Exactness: point-to-segment distance is the classic clamped-projection
     formula — one fixed IEEE expression tree per surviving (point, edge)
     pair, identical in the oracle; the min over edges is an order-free
-    struct min after floor(d * 1e6) quantization. The two-pass bound below
-    is a pure candidate filter and cannot change the winner: because the
-    output tie-breaks on the FLOOR-QUANTIZED distance, the pass-B prune
-    keeps every edge that could still TIE the bound at the quantum — the
-    cutoff is ((floor(sqrt(R2)*1e6)+1)/1e6)^2, one dist_micro quantum past
-    the endpoint-distance upper bound, so an edge with a larger real
+    struct min after floor(d * 1e6) quantization. The bound below is a
+    pure candidate filter and cannot change the winner: because the output
+    tie-breaks on the FLOOR-QUANTIZED distance, the refine keeps every edge
+    that could still TIE the bound at the quantum — the cutoff is
+    ((floor(sqrt(R2)*1e6)+1)/1e6)^2, one dist_micro quantum past the
+    endpoint-distance upper bound R2, so an edge with a larger real
     distance but equal dist_micro (and possibly a smaller zone_id, which
     the struct-min would prefer) always survives to the exact tree.
 
-    100 TB shape: auto-dispatch on the same ``broadcastable`` gate the PIP
-    join uses (round-5 verdict ask #1). When the boundary-edge table is
-    zone-dimension-sized it BROADCASTS and the two-pass bound below runs
-    as map-side nested loops (pass A: squared endpoint-distance upper
-    bound, 4 mul/2 min per pair; pass B: bbox lower bound lb2 <= bound
-    prunes the full clamped-projection tree to the tiny survivor set) —
-    but even then both passes are nested loops over ALL edges x all
-    uncovered points (the round-5 sf1 leg's worst scaler, ratio 8.96 at
-    10x data). Past the gate — or with ``strategy="bucketed"`` — the
-    candidate search is CELL-BUCKETED instead
-    (:func:`_nearest_zone_distance_bucketed`): edges explode to the grid
-    cells their bbox covers, each point meets only the edges of its
-    3x3 cell disk for the bound and of its bound-radius disk for the
-    refine (the ``knn`` ring discipline), with the few points whose disk
-    would exceed ``max_disk`` cells routed through a
-    stragglers-broadcast fallback. Identical output by the same
-    tie-at-quantum argument — the bucketed bound is merely looser, so it
-    prunes less, never more."""
-    from .util import track_persisted
-
-    e_src = edges if edges is not None else zone_edges_df(zones)
-    if strategy == "auto":
-        # measured at BOTH bench scales the bucketed plan wins even when
-        # the edge table easily broadcasts (sf0.1: 0.62 s vs 1.81 s; synth
-        # sf1: 2.32 s vs 14.78 s — BENCH/bench_sf1_leg.json), because the
-        # cost is the nested loop, not the broadcast; auto therefore
-        # always buckets, and the two-pass broadcast form stays available
-        # as strategy="broadcast" (it needs no cell index at all, which
-        # a caller without x/y grid coverage may prefer)
-        strategy = "bucketed"
-    if strategy == "bucketed":
-        return _nearest_zone_distance_bucketed(
-            spark, docs, zones, e_src, **join_kwargs
-        )
-    uncov = spatial_anti_join(spark, docs, zones, **join_kwargs).where(
-        F.col("x").isNotNull() & F.col("y").isNotNull()
-    )
-    uncov = uncov.persist()  # pass A and pass B share one anti-join run
-    e = e_src.select("zone_id", "ex1", "ey1", "ex2", "ey2")
-    px_, py_ = F.col("x"), F.col("y")
-    ax, ay, bx, by = F.col("ex1"), F.col("ey1"), F.col("ex2"), F.col("ey2")
-
-    # pass A: squared endpoint-distance upper bound per point (no sqrt)
-    d2a = (px_ - ax) * (px_ - ax) + (py_ - ay) * (py_ - ay)
-    d2b = (px_ - bx) * (px_ - bx) + (py_ - by) * (py_ - by)
-    bound = (
-        uncov.join(F.broadcast(e))
-        .select("doc_id", "offset", F.least(d2a, d2b).alias("__d2"))
-        .groupBy("doc_id", "offset")
-        .agg(F.min("__d2").alias("__r2"))
-    )
-
-    # pass B: bbox lower bound filters, the exact tree refines survivors
-    dxl = F.greatest(F.least(ax, bx) - px_, px_ - F.greatest(ax, bx), F.lit(0.0))
-    dyl = F.greatest(F.least(ay, by) - py_, py_ - F.greatest(ay, by), F.lit(0.0))
-    lb2 = dxl * dxl + dyl * dyl
-    dx, dy = bx - ax, by - ay
-    len2 = dx * dx + dy * dy
-    t_raw = ((px_ - ax) * dx + (py_ - ay) * dy) / len2
-    t = F.when(len2 == 0, F.lit(0.0)).otherwise(
-        F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
-    )
-    cx_, cy_ = ax + t * dx, ay + t * dy
-    d = F.sqrt((px_ - cx_) * (px_ - cx_) + (py_ - cy_) * (py_ - cy_))
-    # tie-safe cutoff: one dist_micro quantum past the upper bound (see
-    # docstring) — an equal-dist_micro, smaller-zone_id edge never prunes
-    qplus = (F.floor(F.sqrt(F.col("__r2")) * F.lit(1e6)) + F.lit(1)) / F.lit(1e6)
-    best = (
-        uncov.join(bound, ["doc_id", "offset"])
-        .join(F.broadcast(e))
-        .where(lb2 <= qplus * qplus)
-        .select(
-            "doc_id", "offset",
-            F.struct(
-                F.floor(d * 1e6).cast("long").alias("dist_micro"),
-                F.col("zone_id").alias("nearest_zone"),
-            ).alias("__dz"),
-        )
-        .groupBy("doc_id", "offset")
-        .agg(F.min("__dz").alias("__dz"))
-    )
-    out = best.select(
-        "doc_id", "offset",
-        F.col("__dz.nearest_zone").alias("nearest_zone"),
-        F.col("__dz.dist_micro").alias("dist_micro"),
-    )
-    return track_persisted(out, uncov)
-
-
-def _nearest_zone_distance_bucketed(
-    spark: SparkSession,
-    docs: DataFrame,
-    zones: DataFrame,
-    edges: DataFrame,
-    res: int = 7,
-    max_disk: int = 8,
-    **join_kwargs,
-) -> DataFrame:
-    """Cell-bucketed :func:`nearest_zone_distance` — the plan for edge
-    tables too large to broadcast (round-5 verdict ask #1). Byte-identical
-    output to the broadcast two-pass form.
-
-    Shape: edges explode to the grid cells their bbox covers at ``res``
-    (the :func:`edge_intersections` covering — shuffle ∝ edges x covered
-    cells, never points x edges).
+    100 TB shape: the candidate search is cell-bucketed — edges explode to
+    the grid cells their bbox covers (the :func:`edge_intersections`
+    covering; shuffle ∝ edges x covered cells, never points x edges).
     - BOUND round 1: each point meets only its 3x3 cell-disk edges; per
-      point, min SQUARED endpoint distance (the same pass-A bound, just
-      over a candidate subset — any nonempty subset yields a valid upper
-      bound).
-    - BOUND round 2 (``knn`` round-2 discipline): points with an empty
-      3x3 disk — the residue of the residue — take their bound from a
+      point, min SQUARED endpoint distance (any nonempty edge subset yields
+      a valid upper bound).
+    - BOUND round 2: points with an empty 3x3 disk take their bound from a
       nested loop where the STRAGGLER POINTS are the broadcast side and
       the big edge table streams.
-    - REFINE: qplus = one dist_micro quantum past sqrt(bound) (identical
-      cutoff to the broadcast form, so the tie-at-quantum exactness
-      argument carries verbatim — a looser bound only admits MORE
-      candidates). Each point joins the edge cells of its
-      ceil(qplus/cell)-radius disk; candidate duplicates from multi-cell
-      edges are harmless because the reduction is a min. Points whose
-      disk would exceed ``max_disk`` cells per axis (bound far beyond the
-      grid pitch) go through the stragglers-broadcast fallback instead of
-      fanning out.
+    - REFINE: each point joins the edge cells of its ceil(qplus/cell)-radius
+      disk (the ``knn`` ring discipline); candidate duplicates from
+      multi-cell edges are harmless because the reduction is a min. Points
+      whose disk would exceed ``_NZD_MAX_DISK`` cells per axis go through
+      the stragglers-broadcast nested loop instead of fanning out.
     """
     from .util import track_persisted
 
-    n = 1 << res
-    cw, chh = 360.0 / n, 180.0 / n
-
-    def _clamp(c):
-        return F.least(F.greatest(c, F.lit(0)), F.lit(n - 1))
-
-    e = edges.select("zone_id", "ex1", "ey1", "ex2", "ey2")
-    ec = (
-        e.select(
-            "*",
-            F.explode(
-                F.sequence(
-                    _clamp(F.floor((F.least("ex1", "ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")),
-                    _clamp(F.floor((F.greatest("ex1", "ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")),
-                )
-            ).alias("cx"),
-            F.sequence(
-                _clamp(F.floor((F.least("ey1", "ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")),
-                _clamp(F.floor((F.greatest("ey1", "ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")),
-            ).alias("__cys"),
-        )
-        .select("*", F.explode("__cys").alias("cy"))
-        .drop("__cys")
+    res = _NZD_RES
+    cw, chh = cellk.cell_size(res)
+    e = (edges if edges is not None else zone_edges_df(zones)).select(
+        "zone_id", "ex1", "ey1", "ex2", "ey2"
     )
+    ec = edge_cells(e, res)
 
     uncov = (
         spatial_anti_join(spark, docs, zones, **join_kwargs)
         .where(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .withColumn("pcx", _clamp(F.floor((F.col("x") + F.lit(180.0)) / F.lit(cw)).cast("long")))
-        .withColumn("pcy", _clamp(F.floor((F.col("y") + F.lit(90.0)) / F.lit(chh)).cast("long")))
+        .withColumn("pcx", cellk.ix_col(F.col("x"), res))
+        .withColumn("pcy", cellk.iy_col(F.col("y"), res))
         .persist()
     )
 
@@ -1728,11 +1542,10 @@ def _nearest_zone_distance_bucketed(
     d2b = (px_ - bx) * (px_ - bx) + (py_ - by) * (py_ - by)
 
     # bound round 1: 3x3 cell disk
-    disk1 = uncov.select(
-        "doc_id", "offset", "x", "y",
-        F.explode(F.sequence(_clamp(F.col("pcx") - 1), _clamp(F.col("pcx") + 1))).alias("cx"),
-        F.sequence(_clamp(F.col("pcy") - 1), _clamp(F.col("pcy") + 1)).alias("__cys"),
-    ).select("doc_id", "offset", "x", "y", "cx", F.explode("__cys").alias("cy"))
+    disk1 = cellk.explode_disk(
+        uncov.select("doc_id", "offset", "x", "y", "pcx", "pcy"),
+        "pcx", "pcy", res, 1, ix="cx", iy="cy",
+    )
     b1 = (
         disk1.join(ec, ["cx", "cy"])
         .select("doc_id", "offset", F.least(d2a, d2b).alias("__d2"))
@@ -1751,13 +1564,14 @@ def _nearest_zone_distance_bucketed(
     )
     bound = b1.unionByName(b2).persist()
 
-    # refine: identical cutoff expression to the broadcast form
+    # refine: tie-safe cutoff one dist_micro quantum past the bound (see
+    # docstring) — an equal-dist_micro, smaller-zone_id edge never prunes
     qplus = (F.floor(F.sqrt(F.col("__r2")) * F.lit(1e6)) + F.lit(1)) / F.lit(1e6)
     withb = uncov.join(bound, ["doc_id", "offset"]).withColumn("__q", qplus)
     kx = (F.floor(F.col("__q") / F.lit(cw)) + 1).cast("long")
     ky = (F.floor(F.col("__q") / F.lit(chh)) + 1).cast("long")
-    near = withb.where((kx <= max_disk) & (ky <= max_disk))
-    far = withb.where((kx > max_disk) | (ky > max_disk))
+    near = withb.where((kx <= _NZD_MAX_DISK) & (ky <= _NZD_MAX_DISK))
+    far = withb.where((kx > _NZD_MAX_DISK) | (ky > _NZD_MAX_DISK))
 
     dxl = F.greatest(F.least(ax, bx) - px_, px_ - F.greatest(ax, bx), F.lit(0.0))
     dyl = F.greatest(F.least(ay, by) - py_, py_ - F.greatest(ay, by), F.lit(0.0))
@@ -1775,11 +1589,10 @@ def _nearest_zone_distance_bucketed(
         F.col("zone_id").alias("nearest_zone"),
     )
 
-    near_disk = near.select(
-        "doc_id", "offset", "x", "y", "__q",
-        F.explode(F.sequence(_clamp(F.col("pcx") - kx), _clamp(F.col("pcx") + kx))).alias("cx"),
-        F.sequence(_clamp(F.col("pcy") - ky), _clamp(F.col("pcy") + ky)).alias("__cys"),
-    ).select("doc_id", "offset", "x", "y", "__q", "cx", F.explode("__cys").alias("cy"))
+    near_disk = cellk.explode_disk(
+        near.select("doc_id", "offset", "x", "y", "__q", "pcx", "pcy"),
+        "pcx", "pcy", res, kx, ky, ix="cx", iy="cy",
+    )
     best_near = (
         near_disk.join(ec, ["cx", "cy"])
         .where(lb2 <= F.col("__q") * F.col("__q"))

@@ -206,23 +206,48 @@ class TestTileAssignZonal:
             assert int(wide.loc[zid, "count_total"]) == o["count_total"]
 
 
+def _knn_bruteforce(pts, k):
+    """{(from_id, rank, to_id, distance)} ordered by (distance, to_id)."""
+    xy = pts[["x", "y"]].to_numpy()
+    d = np.sqrt(((xy[:, None, :] - xy[None, :, :]) ** 2).sum(axis=2))
+    np.fill_diagonal(d, np.inf)
+    ids = pts.point_id.to_numpy()
+    out = set()
+    for i in range(len(pts)):
+        order = sorted(range(len(pts)), key=lambda j: (d[i, j], ids[j]))[:k]
+        for rank, j in enumerate(order, 1):
+            out.add((int(ids[i]), rank, int(ids[j]), float(d[i, j])))
+    return out
+
+
 class TestKnnNear:
     def test_knn_matches_bruteforce(self, spark, near_points):
-        pts = near_points.toPandas()
-        xy = pts[["x", "y"]].to_numpy()
-        d = np.sqrt(((xy[:, None, :] - xy[None, :, :]) ** 2).sum(axis=2))
-        np.fill_diagonal(d, np.inf)
-        oracle = set()
-        ids = pts.point_id.to_numpy()
-        for i in range(len(pts)):
-            order = sorted(range(len(pts)), key=lambda j: (d[i, j], ids[j]))[:5]
-            for rank, j in enumerate(order, 1):
-                oracle.add((int(ids[i]), rank, int(ids[j])))
+        oracle = {t[:3] for t in _knn_bruteforce(near_points.toPandas(), 5)}
         got = {
             (r.from_id, r["rank"], r.to_id)
             for r in knn(spark, near_points, k=5).collect()
         }
         assert got == oracle
+
+    def test_knn_tie_at_disk_boundary(self, spark):
+        """Point 3's nearest candidate in its 3x3 disk (id 2, 1.5 cells
+        south) lies exactly as far as the disk edge; id 1, 1.5 cells north
+        and OUTSIDE the disk, ties on distance and wins on to_id — the
+        disk alone must not resolve point 3."""
+        import pandas as pd
+
+        res = 7
+        w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+        x, y0 = -180.0 + 70.5 * w, -90.0 + 40.5 * h
+        pts = pd.DataFrame(
+            {"point_id": [3, 2, 1], "x": [x, x, x], "y": [y0, y0 - 1.5 * h, y0 + 1.5 * h]}
+        )
+        got = {
+            (r.from_id, r["rank"], r.to_id, r.distance)
+            for r in knn(spark, spark.createDataFrame(pts), k=1, res=res).collect()
+        }
+        assert (3, 1, 1, 2.109375) in got
+        assert got == _knn_bruteforce(pts, 1)
 
     def test_near_table_radius(self, spark, near_points):
         got = near_table(near_points, radius=0.5).collect()

@@ -9,12 +9,36 @@ from gdal_common_python_spark.operators import layout, spatial_join as sj
 
 
 def test_grid_disk_matches_kernel(spark):
+    """The Column forms in kernels.cells (and layout.grid_disk built on
+    them) equal the numpy forms, including at the domain edges x=±180 /
+    y=±90, at exact multiples of the cell pitch and at a 3857-magnitude x
+    that only the clamp keeps on the grid."""
     res, k = 6, 2
-    ids = [int(cellk.encode(lon, lat, res)) for lon, lat in
-           [(-87.6, 41.8), (0.0, 0.0), (-179.99, -89.99), (179.99, 89.99)]]
-    df = spark.createDataFrame(pd.DataFrame({"cell": ids}))
+    w, h = cellk.cell_size(res)
+    pts = [
+        (-87.6, 41.8), (0.0, 0.0), (-179.99, -89.99), (179.99, 89.99),
+        (-180.0, -90.0), (180.0, 90.0), (-180.0, 90.0), (180.0, -90.0),
+        (-180.0 + 17 * w, -90.0 + 9 * h), (3 * w, -5 * h),
+        (2e7, 1e6), (-2e7, 30.0),
+    ]
+    ids = [int(cellk.encode(lon, lat, res)) for lon, lat in pts]
+    pdf = pd.DataFrame({"x": [p[0] for p in pts], "y": [p[1] for p in pts], "cell": ids})
+    df = spark.createDataFrame(pdf)
+    r_c, ix_c, iy_c = cellk.decode_col("cell")
+    rows = df.select(
+        "x", "y", "cell",
+        cellk.encode_col(F.col("x"), F.col("y"), res).alias("enc"),
+        r_c.alias("r"), ix_c.alias("ix"), iy_c.alias("iy"),
+        cellk.pack_col(res, ix_c, iy_c).alias("packed"),
+        cellk.ring_min_distance_col(ix_c, iy_c, k, F.col("x"), F.col("y"), res).alias("rmd"),
+    ).collect()
+    for r in rows:
+        assert r.enc == r.cell == r.packed
+        assert (r.r, r.ix, r.iy) == tuple(int(v) for v in cellk.decode(np.int64(r.cell)))
+        assert r.rmd == cellk.ring_min_distance(r.cell, k, r.x, r.y)
+
     got = (
-        layout.grid_disk(df, res=res, k=k)
+        layout.grid_disk(df.select("cell").distinct(), res=res, k=k)
         .groupBy("cell")
         .agg(F.sort_array(F.collect_list("neighbor")).alias("nbs"))
         .collect()
@@ -26,6 +50,25 @@ def test_grid_disk_matches_kernel(spark):
     # interior cell: full (2k+1)^2; corner cell: clamped to (k+1)^2
     assert len(by_cell[ids[0]]) == (2 * k + 1) ** 2
     assert len(by_cell[ids[2]]) == (k + 1) ** 2
+
+    boxes = [
+        (-180.0, -90.0, -180.0 + 2 * w, -90.0 + h),
+        (170.0, 80.0, 180.0, 90.0),
+        (-87.6, 41.8, -80.0, 45.0),
+        (3 * w, -5 * h, 4 * w, -5 * h),
+        (2e7, -1e6, 2.1e7, 1e6),
+    ]
+    bdf = spark.createDataFrame(
+        pd.DataFrame(boxes, columns=["xmin", "ymin", "xmax", "ymax"]).reset_index()
+    )
+    cov = cellk.explode_cover_bbox(
+        bdf, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), res
+    ).groupBy("index").agg(
+        F.sort_array(F.collect_list(cellk.pack_col(res, "ix", "iy"))).alias("cells")
+    )
+    by_box = {r["index"]: r["cells"] for r in cov.collect()}
+    for i, b in enumerate(boxes):
+        assert by_box[i] == sorted(int(c) for c in cellk.cover_bbox(*b, res))
 
 
 def test_grid_distance_chebyshev(spark):
