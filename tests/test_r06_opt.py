@@ -1,8 +1,8 @@
 """Round-6 optimization regression tests.
 
 - nearest_zone_distance: the cell-bucketed plan must produce the rows of
-  its DuckDB oracle (verdict ask #1 — the `weak` component's
-  done-criterion).
+  an unpruned broadcast nested loop and of its DuckDB oracle (verdict
+  ask #1 — the `weak` component's done-criterion).
 - pick_join_resolution: the sampled resolution must not depend on the
   zone table's partition layout (verdict ask #5).
 """
@@ -26,12 +26,66 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_nearest_zone_distance_matches_oracle(spark, sdir):
+def _nearest_zone_broadcast_reference(spark, docs, zones, edges):
+    """Unpruned broadcast nested loop: every uncovered point meets every
+    boundary edge, the exact clamped-projection distance is quantized to
+    dist_micro, and a (dist_micro, zone_id) struct-min picks the winner —
+    no cell index, no bound, no ring."""
+    from pyspark.sql import functions as F
+
+    uncov = sj.spatial_anti_join(spark, docs, zones).where(
+        F.col("x").isNotNull() & F.col("y").isNotNull()
+    )
+    e = edges.select("zone_id", "ex1", "ey1", "ex2", "ey2")
+    px_, py_ = F.col("x"), F.col("y")
+    ax, ay, bx, by = F.col("ex1"), F.col("ey1"), F.col("ex2"), F.col("ey2")
+    dx, dy = bx - ax, by - ay
+    len2 = dx * dx + dy * dy
+    t_raw = ((px_ - ax) * dx + (py_ - ay) * dy) / len2
+    t = F.when(len2 == 0, F.lit(0.0)).otherwise(
+        F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
+    )
+    cx_, cy_ = ax + t * dx, ay + t * dy
+    d = F.sqrt((px_ - cx_) * (px_ - cx_) + (py_ - cy_) * (py_ - cy_))
+    best = (
+        uncov.join(F.broadcast(e))
+        .select(
+            "doc_id", "offset",
+            F.struct(
+                F.floor(d * 1e6).cast("long").alias("dist_micro"),
+                F.col("zone_id").alias("nearest_zone"),
+            ).alias("__dz"),
+        )
+        .groupBy("doc_id", "offset")
+        .agg(F.min("__dz").alias("__dz"))
+    )
+    return best.select(
+        "doc_id", "offset",
+        F.col("__dz.nearest_zone").alias("nearest_zone"),
+        F.col("__dz.dist_micro").alias("dist_micro"),
+    )
+
+
+def test_nearest_zone_distance_bucketed_matches_broadcast(spark, sdir):
+    docs = spark.read.parquet(f"{sdir}/documents_spans.parquet")
+    zones = spark.read.parquet(f"{sdir}/zones.parquet")
+    edges = spark.read.parquet(f"{sdir}/zone_edges.parquet")
+    bk = sj.nearest_zone_distance(spark, docs, zones, edges)
+    rk = _rows(bk)
+    release(bk)
+    rb = _rows(_nearest_zone_broadcast_reference(spark, docs, zones, edges))
+    assert rb == rk
+    assert len(rb) > 0
+
+
+def test_nearest_zone_distance_auto_is_bucketed_and_equal(spark, sdir):
     import __spark_entry__ as entry
 
     docs = spark.read.parquet(f"{sdir}/documents_spans.parquet")
     zones = spark.read.parquet(f"{sdir}/zones.parquet")
     edges = spark.read.parquet(f"{sdir}/zone_edges.parquet")
+    # the default call runs the cell-bucketed search; its rows must equal
+    # the DuckDB oracle
     out = sj.nearest_zone_distance(spark, docs, zones, edges)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "cx" in plan and "cy" in plan  # cell-disk equi-join present
